@@ -8,12 +8,15 @@
         --input  <path or iceberg table of (doc_id, spans)> \
         --output <output dir / table> \
         --checkpoint <manifest dir> \
-        --chunks 256 --partitions 2048
+        --chunks 256
 
 Reads the interleaved documents table (parquet path, or an Iceberg table
-name when a catalog is configured), runs the main-content extraction with
-size-salted partitioning, writes spans_out chunk-by-chunk with the
-resumable manifest, and emits lineage + per-document metrics tables.
+name when a catalog is configured), runs the main-content extraction and
+writes spans_out chunk-by-chunk with the resumable manifest, then emits
+lineage + per-document metrics tables. Each chunk is one Spark job
+(scan -> chunk filter -> mapInArrow -> parquet write) with no shuffle:
+byte-sized scan splits, the straggler split and ``fan_out`` keep its
+tasks even.
 """
 
 from __future__ import annotations
@@ -31,8 +34,6 @@ def main(argv=None) -> int:
     ap.add_argument("--checkpoint", required=True,
                     help="manifest dir for resumable chunked writes")
     ap.add_argument("--chunks", type=int, default=64)
-    ap.add_argument("--partitions", type=int, default=None,
-                    help="shuffle parallelism for the balanced repartition")
     ap.add_argument("--metrics-output", default=None)
     ap.add_argument("--straggler-chars", type=int, default=1_000_000,
                     help="docs above this size route to dedicated tasks")
@@ -43,7 +44,7 @@ def main(argv=None) -> int:
     from pyspark.sql import SparkSession
 
     from sparkhtml.spark.checkpoint import ChunkedRun
-    from sparkhtml.spark.partitioning import straggler_split, with_size_salt
+    from sparkhtml.spark.partitioning import straggler_split
     from sparkhtml.spark.pipeline import extract_metrics_df, extract_spans_df
 
     # under spark-submit the session/master/executors come from the submit
@@ -58,8 +59,8 @@ def main(argv=None) -> int:
 
     # format-agnostic ingest: a (doc_id, payload binary) corpus is a PDF
     # table — parse it into the SAME interleaved spans schema first, so
-    # the rest of the job (salting, extraction, checkpointing, lineage)
-    # is identical for HTML-span and PDF inputs
+    # the rest of the job (straggler split, extraction, checkpointing,
+    # lineage) is identical for HTML-span and PDF inputs
     if "payload" in docs.columns and "spans" not in docs.columns:
         from sparkhtml.spark.pdf import pdf_spans_df
 
@@ -80,17 +81,11 @@ def main(argv=None) -> int:
         # as empty-span documents, appearing in both outputs)
         docs = parsed.filter(parsed.err.isNull()).select("doc_id", "spans")
 
-    partitions = args.partitions or spark.sparkContext.defaultParallelism * 2
     normal, stragglers = straggler_split(docs, args.straggler_chars)
-
-    def transform(df):
-        salted = with_size_salt(df)
-        balanced = salted.repartition(partitions, "size_bucket", "salt")
-        return extract_spans_df(balanced)
 
     t0 = time.time()
     run = ChunkedRun(spark, args.output, n_chunks=args.chunks)
-    summary = run.run(normal, transform)
+    summary = run.run(normal, extract_spans_df)
     # stragglers: small cardinality, maximum spread — one doc per task.
     # Plain repartition(n) is ROUND-ROBIN (exactly one per task);
     # repartition(n, "doc_id") would hash and clump ~ln n / ln ln n docs

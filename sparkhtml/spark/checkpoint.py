@@ -22,7 +22,7 @@ import os
 import time
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 
 class ChunkedRun:
@@ -97,22 +97,23 @@ class ChunkedRun:
     def _write_chunk(self, out: DataFrame, chunk: int) -> int:
         """Idempotent per-chunk overwrite; returns the row count written.
 
+        The count is an ``Observation`` on the written frame, filled by
+        the write itself: no read-back and no second action.
+
         Iceberg path: ``chunk`` is the table's partition column, so
         ``overwritePartitions`` replaces exactly this chunk's prior attempt
         (crash-safe retry) in one atomic snapshot commit. The parquet path
         is the identical layout via directory overwrite.
         """
+        written = Observation()
+        out = out.observe(written, F.count(F.lit(1)).alias("n_rows"))
         if self.iceberg_table is not None:
             tagged = out.withColumn("chunk", F.lit(chunk))
             tagged.writeTo(self.iceberg_table).overwritePartitions()
-            return (
-                self.spark.table(self.iceberg_table)
-                .filter(F.col("chunk") == chunk)
-                .count()
-            )
-        dest = os.path.join(self.out_dir, f"chunk={chunk}")
-        out.write.mode("overwrite").parquet(dest)
-        return self.spark.read.parquet(dest).count()
+        else:
+            dest = os.path.join(self.out_dir, f"chunk={chunk}")
+            out.write.mode("overwrite").parquet(dest)
+        return written.get["n_rows"]
 
     def lineage_df(self) -> DataFrame:
         rows = []

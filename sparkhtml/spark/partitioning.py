@@ -1,21 +1,29 @@
 """Partitioning & skew handling (SURVEY.md §4.2 'Partitioning / shuffle').
 
 The document-size distribution of a web corpus is heavy-tailed; hash
-partitioning by doc_id alone gives even *counts* but uneven *bytes* —
-one straggler task holds the 99.9th-percentile giants. Plan:
+partitioning by doc_id alone gives even *counts* but uneven *bytes*. The
+production job (``scripts/run_extract.py``) therefore shuffles nothing on
+its main path and relies on three things instead:
 
-- ``size_bucket = floor(log2(n_chars))`` — cheap, data-independent, no
-  extra pass over the corpus (vs. exact percentiles, which would need one);
-- ``salt = pmod(hash(doc_id), SALT_N)`` spreads each bucket;
-- repartition on (size_bucket, salt): giants scatter across SALT_N tasks
-  instead of hashing into one; AQE skew-join/coalesce handles the rest.
+- byte-sized scan splits: Spark cuts file scans by bytes
+  (``spark.sql.files.maxPartitionBytes``), so a scan task holds a bounded
+  payload however the sizes are distributed, and ``ChunkedRun``'s hash
+  chunk filter thins every split evenly;
+- ``straggler_split``: the pathological giants leave the main path for a
+  stage of their own, one document per task;
+- ``fan_out``: an input with too few partitions (one row group per file)
+  is spread to the session's cores right after the read.
 
-At 10^12 docs the same columns become the Iceberg table's bucket spec, so
-the layout is already balanced at rest and the pipeline's first stage
-reads without a shuffle.
+``with_size_salt`` (``size_bucket = floor(log2(n_chars))`` plus
+``salt = pmod(hash(doc_id), SALT_N)``) remains a library function for
+callers that want a size-balanced repartition on (size_bucket, salt).
+At 10^12 docs the same columns become the Iceberg table's bucket spec,
+so the layout is already balanced at rest.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -29,6 +37,12 @@ SALT_N = 64
 # ~65 KB sf0.001 frames are where the fixed cost still loses. Tune per
 # call site only with a measurement.
 FAN_OUT_MIN_BYTES = 128 << 10
+
+# a physical-plan tree-string line whose node is an exchange (shuffle,
+# broadcast or reused) or the adaptive wrapper that an exchange or a
+# subquery brings, at any depth, including a cached relation's plan
+_EXCHANGE_NODE = re.compile(r"^[\s:|+-]*(AdaptiveSparkPlan|\w*Exchange)\b",
+                            re.MULTILINE)
 
 
 def fan_out(
@@ -52,9 +66,16 @@ def fan_out(
     - Catalyst's optimized-plan size estimate ≥ ``min_bytes`` — tiny
       inputs lose more to the exchange + task scheduling than they gain
       (measured: see FAN_OUT_MIN_BYTES);
+    - no exchange in the physical plan — an upstream exchange already
+      decided the partitioning, and asking an adaptive plan for its
+      partition count would run its shuffle map stages (or subqueries)
+      as a side job that the real action then runs again;
     - physical partition count < half the session's default parallelism —
       well-partitioned inputs (every real 100 TB table) make this a
       no-op, so the exchange only appears in the degenerate local shapes.
+
+    The decision runs no Spark job: planning only, and the partition
+    count of an exchange-free plan is known without executing it.
 
     Value-neutral: a round-robin exchange permutes row order only, and
     every declared query is order-insensitive (the correctness gate
@@ -64,10 +85,11 @@ def fan_out(
         return df
     try:
         target = df.sparkSession.sparkContext.defaultParallelism
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
+        qe = df._jdf.queryExecution()
+        size = int(qe.optimizedPlan().stats().sizeInBytes())
         if size < min_bytes:
+            return df
+        if _EXCHANGE_NODE.search(qe.executedPlan().toString()):
             return df
         nparts = df.rdd.getNumPartitions()
     except Exception:  # pragma: no cover - conservative: never fail a plan

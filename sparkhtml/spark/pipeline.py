@@ -38,7 +38,7 @@ from ..escape import escape_series, unescape_series
 from ..extract import doc_metrics, extract_main_text, extract_spans
 from ..selector import CompiledSelector
 from . import schemas
-from .partitioning import fan_out, with_size_salt
+from .partitioning import fan_out
 
 # Arrow field layouts for the hand-built output batches. Kept in lockstep
 # with schemas.py via to_arrow_schema (tests/test_spark.py asserts this).
@@ -269,14 +269,6 @@ def extract_spans_df_packed(documents: DataFrame) -> DataFrame:
             F.col("spans_json"), schemas.T.ArrayType(schemas.SPAN)
         ).alias("spans"),
     )
-
-
-def extract_spans_balanced(documents: DataFrame, partitions: int) -> DataFrame:
-    """Same, but repartitioned by (size_bucket, salt) first so heavy
-    documents spread evenly — the skew plan of SURVEY.md §4.3."""
-    salted = with_size_salt(documents)
-    balanced = salted.repartition(partitions, "size_bucket", "salt")
-    return extract_spans_df(balanced)
 
 
 # ------------------------------------------------------------------ nodes

@@ -3,6 +3,9 @@ in-UDF matcher, dedup/similarity/textstats operators, checkpoint resume,
 partitioning, multimodal plumbing. One shared local session (conftest).
 """
 
+import glob
+import json
+import os
 import shutil
 
 import pytest
@@ -590,6 +593,117 @@ def test_checkpoint_resume(spark, docs_df, tmp_path):
     shutil.rmtree(out, ignore_errors=True)
 
 
+def _jobs_started(spark, action):
+    """Run ``action``; return its result and the ids of the Spark jobs it
+    started (the listener bus is drained so the status store is current)."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup())
+    result = action()
+    bus.waitUntilEmpty()
+    return result, set(sc.statusTracker().getJobIdsForGroup()) - before
+
+
+def test_fan_out_decides_without_a_job(spark, docs_df, tmp_path):
+    """fan_out is planning only: on a frame that already has an exchange
+    it returns the frame untouched and launches no Spark job (asking an
+    adaptive plan for its partition count runs its shuffle map stage).
+    A multi-partition scan -- the shape of every real table -- passes
+    through with an identical plan, even when size alone would fan out."""
+    from sparkhtml.spark.partitioning import fan_out
+
+    n = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "docs")
+    docs_df.repartition(n).write.parquet(path)
+    scan = spark.read.parquet(path)
+
+    shuffled = scan.repartition(1)
+    got, jobs = _jobs_started(spark, lambda: fan_out(shuffled, min_bytes=0))
+    assert got is shuffled and jobs == set()
+
+    assert scan.rdd.getNumPartitions() * 2 >= n
+    got, jobs = _jobs_started(spark, lambda: fan_out(scan, min_bytes=0))
+    assert got is scan and jobs == set()  # the same frame, so the same plan
+
+    # the guard still spreads a single-partition scan
+    one_file = glob.glob(os.path.join(path, "*.parquet"))[0]
+    single = spark.read.parquet(one_file)
+    assert single.rdd.getNumPartitions() == 1
+    assert fan_out(single, min_bytes=0).rdd.getNumPartitions() == n
+
+
+def test_checkpoint_counts_come_from_the_write(spark, docs_df, tmp_path):
+    """Each chunk is one Spark job: the manifest's n_rows is observed on
+    the write itself, and equals the rows in that chunk's directory."""
+    from sparkhtml.spark.checkpoint import ChunkedRun
+
+    out = str(tmp_path / "ckpt")
+    summary, jobs = _jobs_started(
+        spark, lambda: ChunkedRun(spark, out, n_chunks=3).run(
+            docs_df, extract_spans_df))
+    assert len(jobs) == 3
+    assert summary["processed"] == 3
+    assert summary["rows"] == docs_df.count()
+    for path in glob.glob(os.path.join(out, "_manifest", "chunk-*.json")):
+        with open(path) as f:
+            rec = json.load(f)
+        written = spark.read.parquet(os.path.join(out, f"chunk={rec['chunk']}"))
+        assert rec["status"] == "ok" and rec["n_rows"] == written.count()
+
+
+def test_run_extract_job(spark, tmp_path, monkeypatch, capsys):
+    """The spark-submit job end to end, in-process on a tiny corpus with
+    two giants routed to the straggler stage: every document lands once
+    across the chunk directories and ``stragglers/``, with the pure-Python
+    ``extract_spans`` result; every manifest is ``ok``; the metrics table
+    has one row per document; a rerun resumes every chunk."""
+    import runpy
+
+    from sparkhtml.spark.partitioning import doc_size_col
+
+    main = runpy.run_path(os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "scripts", "run_extract.py"))["main"]
+
+    docs = list(make_corpus(40))
+    src = str(tmp_path / "docs")
+    spark.createDataFrame(docs, schema=schemas.DOCUMENTS_INTERLEAVED) \
+        .repartition(2).write.parquet(src)
+    sizes = sorted(r[0] for r in spark.read.parquet(src)
+                   .select(doc_size_col()).collect())
+    out, metrics = str(tmp_path / "out"), str(tmp_path / "metrics")
+    argv = ["--input", src, "--output", out,
+            "--checkpoint", str(tmp_path / "ck"), "--chunks", "3",
+            "--metrics-output", metrics,
+            "--straggler-chars", str(sizes[-3])]
+    # main() ends with spark.stop(); keep the shared test session alive
+    monkeypatch.setattr(type(spark), "stop", lambda self: None)
+
+    assert main(argv) == 0
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["n_stragglers"] == 2
+    assert summary["processed"] == 3 and summary["rows"] == len(docs) - 2
+
+    rows = spark.read.parquet(os.path.join(out, "chunk=*")).collect()
+    strag = spark.read.parquet(os.path.join(out, "stragglers")).collect()
+    assert len(strag) == 2
+    got = {r["doc_id"]: [s.asDict() for s in r["spans"]] for r in rows + strag}
+    assert len(rows) + len(strag) == len(got) == len(docs)
+    for doc in docs[::5]:
+        assert got[doc["doc_id"]] == extract_spans(doc["spans"]), doc["doc_id"]
+
+    manifests = glob.glob(os.path.join(out, "_manifest", "chunk-*.json"))
+    assert len(manifests) == 3
+    for path in manifests:
+        with open(path) as f:
+            assert json.load(f)["status"] == "ok"
+    assert spark.read.parquet(metrics).count() == len(docs)
+
+    assert main(argv) == 0
+    rerun = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rerun["resumed"] == 3 and rerun["processed"] == 0
+
+
 def test_partitioning(spark, docs_df):
     from sparkhtml.spark.partitioning import straggler_split, with_size_salt
 
@@ -1134,23 +1248,28 @@ def test_checkpoint_iceberg_sink_path(spark, docs_df, tmp_path, monkeypatch):
             self.df, self.table = df, table
 
         def overwritePartitions(self):
-            chunk = self.df.select("chunk").first()[0]
+            # the write must be the first action on the frame: the chunk's
+            # row count is an Observation that the first action fills
+            staged = f"{out}/t/_staged"
+            self.df.write.mode("overwrite").parquet(staged)
+            chunk = spark.read.parquet(staged).select("chunk").first()[0]
             calls.append((self.table, chunk))
-            self.df.write.mode("overwrite").parquet(f"{out}/t/chunk={chunk}")
+            os.replace(staged, f"{out}/t/chunk={chunk}")
+
+    def _no_readback(self, t):
+        raise AssertionError("the row count must come from the write")
 
     # patch the CONCRETE DataFrame class (Spark 4 splits classic/connect;
     # pyspark.sql.DataFrame is the abstract facade)
     monkeypatch.setattr(
         type(docs_df), "writeTo", lambda df, t: _FakeWriter(df, t)
     )
-    monkeypatch.setattr(
-        type(spark), "table",
-        lambda self, t: self.read.parquet(f"{out}/t/chunk=*"),
-        raising=True,
-    )
+    monkeypatch.setattr(type(spark), "table", _no_readback, raising=True)
     run = ChunkedRun(spark, out, n_chunks=2, iceberg_table="cat.db.docs")
     summary = run.run(docs_df, extract_spans_df)
     assert summary["processed"] == 2
+    assert summary["rows"] == docs_df.count() == \
+        spark.read.parquet(f"{out}/t/chunk=*").count()
     assert [c for _, c in calls] == [0, 1]
     assert all(t == "cat.db.docs" for t, _ in calls)
     # resume: both chunks recorded → second run writes nothing
